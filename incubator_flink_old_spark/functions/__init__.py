@@ -86,28 +86,9 @@ def distributed_cache_file(spark: SparkSession, path: str) -> None:
     spark.sparkContext.addFile(path)
 
 
-def observe_counters(df: DataFrame, name: str, *exprs: Column) -> DataFrame:
-    """A8: accumulators/counters — job-global metrics without a second
-    pass. The reference merges Accumulator instances at the JobManager;
-    Spark's ``observe`` attaches named aggregates to the plan, collected
-    by a QueryExecutionListener or returned via Observation.
-
-    Use with pyspark.sql.Observation:
-        obs = Observation(name); df = df.observe(obs, *exprs); ...action...
-        obs.get -> {metric: value}
-    This helper is the plain named-metric form.
-    """
-    return df.observe(name, *exprs)
-
-
 def long_counter(col: str, alias: str) -> Column:
     """A8 LongCounter analogue."""
     return F.count(F.lit(1) if col == "*" else F.col(col)).alias(alias)
-
-
-def double_counter(col: str, alias: str) -> Column:
-    """A8 DoubleCounter analogue."""
-    return F.sum(F.col(col)).alias(alias)
 
 
 def histogram(df: DataFrame, col: str) -> DataFrame:

@@ -56,6 +56,20 @@ def _one_row_broadcast(spark, cols) -> DataFrame:
     return spark.createDataFrame([tuple(p for _, _, p in cols)], schema)
 
 
+def _fresh_name(df: DataFrame, base: str) -> str:
+    """A helper-column name absent from ``df`` (``base``, else
+    ``base_1``, ``base_2``, … — compared case-insensitively, as Spark
+    resolves names): the broadcast arm crossJoins its index column onto
+    the CALLER's frame, so a fixed name could shadow or clash with a
+    caller column that the literal arm would have passed through."""
+    taken = {c.lower() for c in df.columns}
+    name, i = base, 0
+    while name.lower() in taken:
+        i += 1
+        name = f"{base}_{i}"
+    return name
+
+
 def _centers_payload(rows) -> list:
     """Collected (cell, cv) rows → python payload sorted by cell id (the
     fold's strict-improvement walk order — same order the literal arm
@@ -75,10 +89,11 @@ def _attach_centers(df: DataFrame, rows) -> tuple[DataFrame, Column]:
     both-arms-bit-equal in tests/test_wave48.py)."""
     if sum(1 + len(r["cv"]) for r in rows) <= _FOLD_LITERAL_MAX_ELEMS:
         return df, _centers_sql_array(rows)
+    name = _fresh_name(df, "__centers")
     one = _one_row_broadcast(
-        df.sparkSession, [("__centers", _CENTERS_DDL, _centers_payload(rows))]
+        df.sparkSession, [(name, _CENTERS_DDL, _centers_payload(rows))]
     )
-    return df.crossJoin(F.broadcast(one)), F.col("__centers")
+    return df.crossJoin(F.broadcast(one)), F.col(name)
 
 
 def _centers_frame(spark, rows) -> DataFrame:
@@ -114,10 +129,11 @@ def _attach_books(df: DataFrame, by_j: dict, m: int) -> tuple[DataFrame, Column]
     n = sum(1 + len(r["bv"]) for rows in by_j.values() for r in rows)
     if n <= _FOLD_LITERAL_MAX_ELEMS:
         return df, _books_sql_array(by_j, m)
+    name = _fresh_name(df, "__books")
     one = _one_row_broadcast(
-        df.sparkSession, [("__books", _BOOKS_DDL, _books_payload(by_j, m))]
+        df.sparkSession, [(name, _BOOKS_DDL, _books_payload(by_j, m))]
     )
-    return df.crossJoin(F.broadcast(one)), F.col("__books")
+    return df.crossJoin(F.broadcast(one)), F.col(name)
 
 
 def _books_frame(spark, by_j: dict, m: int) -> DataFrame:
@@ -1016,15 +1032,16 @@ def sq8_encode_map(
         # Above the literal budget the quantizer table rides a one-row
         # broadcast frame (VERDICT r12 item 1) — same values, same
         # element_at lookups.
+        extra = (_fresh_name(df, "__lo"), _fresh_name(df, "__hi"))
         one = _one_row_broadcast(
             df.sparkSession,
             [
-                ("__lo", "array<bigint>", [int(r.lo) for r in ordered]),
-                ("__hi", "array<bigint>", [int(r.hi) for r in ordered]),
+                (extra[0], "array<bigint>", [int(r.lo) for r in ordered]),
+                (extra[1], "array<bigint>", [int(r.hi) for r in ordered]),
             ],
         )
-        src, extra = df.crossJoin(F.broadcast(one)), ("__lo", "__hi")
-        lo_arr, hi_arr = F.col("__lo"), F.col("__hi")
+        src = df.crossJoin(F.broadcast(one))
+        lo_arr, hi_arr = F.col(extra[0]), F.col(extra[1])
     k = F.transform(
         as_double_array(vec), lambda x: F.floor(x * F.lit(grid)).cast("long")
     )

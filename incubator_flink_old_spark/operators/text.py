@@ -45,13 +45,6 @@ def token_count(text_col: Column | str) -> Column:
     return F.size(tokens(text_col))
 
 
-def bpe_ish_token_count(text_col: Column | str) -> Column:
-    """BPE-ish subword proxy: count alternating alpha / digit / symbol
-    runs (the usual pre-tokenizer regex shape)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.regexp_count(F.lower(c), F.lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"))
-
-
 def text_stats(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
     """Per-document structural stats: chars, tokens, distinct tokens,
     mean token length, type-token ratio."""

@@ -54,8 +54,3 @@ def has_partial_aggregate(df: DataFrame) -> bool:
     (keys=..., functions=[partial_...)."""
     txt = explain_str(df, "simple")
     return "partial_" in txt
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    txt = explain_str(df, "simple")
-    return txt.count("WholeStageCodegen")

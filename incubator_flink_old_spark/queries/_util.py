@@ -79,3 +79,28 @@ def split_col(key: str = "doc_id") -> Column:
         .when(b < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
+
+
+#: Schema of a vector-delta replay (``vec_id_thirds`` batches).
+VEC_SCHEMA = "vec_id long, embedding array<float>"
+
+
+def vec_id_thirds(delta: DataFrame) -> tuple[DataFrame, ...]:
+    """Split a (vec_id, embedding) delta into three vec_id-range
+    batches, one file each, for a 3-file stream replay. An empty or tiny
+    delta (max vec_id < 3) would make the hi//3 cuts degenerate (or
+    TypeError on None), so it replays as a single batch — the encoder
+    parity laws are batch-boundary-invariant (ADVICE r07)."""
+    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
+    if hi is None or hi < 3:
+        return (delta.repartition(1),)
+    lo, mid = hi // 3, 2 * (hi // 3)
+    v = F.col("vec_id")
+    return tuple(
+        b.repartition(1)
+        for b in (
+            delta.filter(v <= lo),
+            delta.filter((v > lo) & (v <= mid)),
+            delta.filter(v > mid),
+        )
+    )

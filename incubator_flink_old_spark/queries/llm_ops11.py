@@ -10,7 +10,6 @@ algorithm), plus per-cell label purity over that IVF layout.
 
 from __future__ import annotations
 
-import itertools
 import tempfile
 
 from pyspark.sql import Window
@@ -498,8 +497,6 @@ def q_ann_recall_lsh(spark, sf_dir):
 # Custom-state streaming operator ⇄ batch parity (the applyInPandasWithState
 # surface gets a driver row)
 # --------------------------------------------------------------------------
-_STREAM_SEQ = itertools.count()
-
 #: Session gap and watermark of the custom-state parity row, shared by
 #: the Spark call and every constant in the oracle below.
 _CS_GAP_S = 300
@@ -576,11 +573,9 @@ def q_stream_custom_state_parity(spark, sf_dir):
     out = stateful_session_stats(
         ev, gap_seconds=_CS_GAP_S, watermark="10 minutes"
     )
-    name = f"stream_cs_{next(_STREAM_SEQ)}"
     # state_partitions=16: Python-worker-bound pandas-state row keyed
     # by user_id (the q_stream_cdc_parity sweep rationale, round 13).
-    run_stream_to_memory(out, name, "append", state_partitions=16)
-    return spark.table(name)
+    return run_stream_to_memory(out, "append", state_partitions=16)
 
 
 # --------------------------------------------------------------------------

@@ -13,10 +13,6 @@ hash.
 from __future__ import annotations
 
 import datetime
-import itertools
-import os
-import tempfile
-import time
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -24,8 +20,6 @@ from pyspark.sql import functions as F
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import split_case_sql, split_col, t
 from incubator_flink_old_spark.queries.llm_ops2 import _dedup_cluster_oracle
-
-_SEQ = itertools.count()
 
 # --------------------------------------------------------------------------
 # Streaming SpaceSaving heavy hitters ⇄ exact batch counts
@@ -73,33 +67,23 @@ def q_stream_hh_parity(spark, sf_dir):
     Scale: state is O(capacity) per group forever; emissions are
     capacity-bounded rows per group per batch."""
     from incubator_flink_old_spark.streaming import (
+        replay_run,
         run_stream_to_memory,
         stateful_heavy_hitters,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_hh_src_")
-    (
-        t(spark, sf_dir, "events")
-        .select("event_type", "user_id")
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(src)
-    )
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = stateful_heavy_hitters(
-        stream, capacity=_HH_CAPACITY, k=_HH_CAPACITY,
-        group="event_type", value="user_id",
-    )
-    name = f"stream_hh_{next(_SEQ)}"
-    run_stream_to_memory(out, name, "update", state_partitions=4)
-    final = (
-        spark.table(name)
-        .groupBy("event_type", "user_id")
-        .agg(F.max("cnt").alias("cnt"), F.max("err").alias("err"))
+    with replay_run(spark, "event_type string, user_id long") as run:
+        run.write(
+            t(spark, sf_dir, "events").select("event_type", "user_id")
+            .repartition(4)
+        )
+        out = stateful_heavy_hitters(
+            run.stream(), capacity=_HH_CAPACITY, k=_HH_CAPACITY,
+            group="event_type", value="user_id",
+        )
+        sink = run_stream_to_memory(out, "update", state_partitions=4)
+    final = sink.groupBy("event_type", "user_id").agg(
+        F.max("cnt").alias("cnt"), F.max("err").alias("err")
     )
     w = Window.partitionBy("event_type").orderBy(F.col("cnt").desc(), "user_id")
     return (
@@ -139,42 +123,35 @@ def q_stream_eos_sink_parity(spark, sf_dir):
     from incubator_flink_old_spark.streaming import (
         idempotent_parquet_sink,
         read_committed,
+        replay_run,
     )
 
-    base = tempfile.mkdtemp(prefix="t2_eos_")
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    full = (
-        t(spark, sf_dir, "events")
-        .select(
-            "event_id", "user_id", "event_type", "value",
-            F.col("ts").cast("timestamp").cast("double").alias("ep"),
+    full = t(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value",
+        F.col("ts").cast("timestamp").cast("double").alias("ep"),
+    )
+    schema = (
+        "event_id long, user_id long, event_type string, value double, "
+        "ep double"
+    )
+    with replay_run(spark, schema) as run:
+        run.write(full.repartition(3))
+        out = run.path("out")
+        sink = idempotent_parquet_sink(out)
+        q = (
+            run.stream().writeStream.foreachBatch(sink)
+            .option("checkpointLocation", run.path("ckpt"))
+            .start()
         )
-    )
-    full.repartition(3).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, "
-            "value double, ep double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    sink = idempotent_parquet_sink(out)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # forced duplicate delivery of a committed epoch with a poisoned
-    # payload — the no-op proves idempotence, not absence of retries
-    sink(full, 0)
-    return read_committed(spark, out).select(
-        "event_id", "user_id", "event_type", "value", "ep"
-    )
+        q.processAllAvailable()
+        q.stop()
+        # forced duplicate delivery of a committed epoch with a poisoned
+        # payload — the no-op proves idempotence, not absence of retries
+        sink(full, 0)
+        # Materialized: read_committed is a lazy scan of the sink dir,
+        # which the run deletes on exit.
+        committed = read_committed(spark, out).select(full.columns)
+        return committed.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -230,7 +207,10 @@ def q_stream_late_drop_parity(spark, sf_dir):
     state at 100 TB/day — state for a window lives only until the
     watermark passes its end."""
     from incubator_flink_old_spark.queries._util import dsum
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     ev = (
         t(spark, sf_dir, "events")
@@ -248,43 +228,30 @@ def q_stream_late_drop_parity(spark, sf_dir):
     wm_bound = m - datetime.timedelta(minutes=10)
     late = (F.col("event_id") % 10 == 7) & (F.col("we") <= F.lit(late_bound))
     trailing = F.col("we") > F.lit(wm_bound)
-    src = tempfile.mkdtemp(prefix="t2_late_src_")
-    cols = ["event_id", "ts", "value"]
     batches = (
         ev.filter(~late & ~trailing),
         ev.filter(~late & trailing),
         ev.limit(0),  # empty batch: lets the committed watermark apply
         ev.filter(late),
     )
-    for i, b in enumerate(batches):
-        before = {f for f in os.listdir(src)} if i else set()
-        b.select(cols).repartition(1).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(src)
-        if i:
-            bump = time.time() + 1800 * i
-            for f in os.listdir(src):
-                if f.endswith(".parquet") and f not in before:
-                    os.utime(os.path.join(src, f), (bump, bump))
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "n_events",
-            "total_value",
+    cols = ["event_id", "ts", "value"]
+    with replay_run(spark, "event_id long, ts timestamp, value double") as run:
+        run.write(*(b.select(cols).repartition(1) for b in batches))
+        agg = (
+            run.stream().withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value", "total_value"),
+            )
+            .select(
+                F.col("window.start").alias("win_start"),
+                F.col("window.end").alias("win_end"),
+                "n_events",
+                "total_value",
+            )
         )
-    )
-    name = f"stream_late_{next(_SEQ)}"
-    run_stream_to_memory(agg, name, "append", state_partitions=4)
-    return spark.table(name)
+        return run_stream_to_memory(agg, "append", state_partitions=4)
 
 
 # --------------------------------------------------------------------------
@@ -326,9 +293,7 @@ def q_stream_enrich_parity(spark, sf_dir):
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
     )
-    name = f"stream_enrich_{next(_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return run_stream_to_memory(agg, "complete")
 
 
 # --------------------------------------------------------------------------

@@ -22,7 +22,6 @@ and the state read against the batch aggregate the state must equal.
 
 from __future__ import annotations
 
-import itertools
 import shutil
 import tempfile
 
@@ -31,8 +30,6 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import t
-
-_SEQ = itertools.count()
 
 # ---------------------------------------------------------------------------
 # Python DataSource API — the modern GenericInputFormat
@@ -169,9 +166,7 @@ def q_stream_dedup_watermark_parity(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_ddw_{next(_SEQ)}"
-    run_stream_to_memory(dedup, name, "append")
-    return spark.table(name)
+    return run_stream_to_memory(dedup, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -206,28 +201,16 @@ def q_statestore_read(spark, sf_dir):
     |distinct keys|, independent of stream length."""
     ck = tempfile.mkdtemp(prefix="flinkold_ss_")
     try:
-        from incubator_flink_old_spark.streaming import read_events_stream
+        from incubator_flink_old_spark.streaming import (
+            read_events_stream,
+            run_stream_to_memory,
+        )
 
         stream = read_events_stream(spark, sf_dir)
         agg = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n")
         )
-        name = f"statestore_src_{next(_SEQ)}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ck)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        run_stream_to_memory(agg, "complete", checkpoint=ck)
         state = spark.read.format("statestore").load(ck)
         out = state.select(
             F.col("key.event_type").alias("event_type"),

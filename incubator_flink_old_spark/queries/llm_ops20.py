@@ -17,18 +17,11 @@ semantics remain driver-covered via applyInPandasWithState
 
 from __future__ import annotations
 
-import itertools
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import t
 from incubator_flink_old_spark.queries.iterations import EDGES_SQL, edges_df
-
-_SEQ = itertools.count()
 
 # ---------------------------------------------------------------------------
 # Strongly connected components
@@ -126,72 +119,34 @@ def q_stream_restart_recovery(spark, sf_dir):
     The split is deterministic (event_id parity), sums ride the
     decimal-staged dsum contract, and complete-mode output makes the
     final table the full recovered state."""
-    src = tempfile.mkdtemp(prefix="flinkold_restart_src_")
-    ck = tempfile.mkdtemp(prefix="flinkold_restart_ck_")
-    try:
-        ev = t(spark, sf_dir, "events")
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-            os.path.join(src, "half0")
-        )
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
-        schema = (
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string"
-        )
+    ev = t(spark, sf_dir, "events")
+    schema = (
+        "event_id long, ts timestamp, user_id long, "
+        "event_type string, value double, props string"
+    )
+    with replay_run(spark, schema) as run:
 
-        def agg_stream():
-            stream = (
-                spark.readStream.schema(schema)
-                .format("parquet")
-                .load(os.path.join(src, "*"))
-            )
-            return stream.groupBy("event_type").agg(
+        def run_from_checkpoint():
+            agg = run.stream().groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(27,6)"))
                 .cast("double")
                 .alias("sum_value"),
             )
-
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            name1 = f"restart_run1_{next(_SEQ)}"
-            q1 = (
-                agg_stream()
-                .writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name1)
-                .option("checkpointLocation", ck)
-                .start()
-            )
-            q1.processAllAvailable()
-            q1.stop()
-            q1.awaitTermination()
-
-            # the second half lands while no query is running
-            ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-                os.path.join(src, "half1")
+            return run_stream_to_memory(
+                agg, "complete", checkpoint=run.path("ckpt")
             )
 
-            name2 = f"restart_run2_{next(_SEQ)}"
-            q2 = (
-                agg_stream()
-                .writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name2)
-                .option("checkpointLocation", ck)
-                .start()
-            )
-            q2.processAllAvailable()
-            q2.stop()
-            q2.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # Pin before the checkpoint/source dirs are reclaimed.
-        return spark.table(name2).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-        shutil.rmtree(src, ignore_errors=True)
+        run.write(ev.filter(F.col("event_id") % 2 == 0).coalesce(1))
+        run_from_checkpoint()
+        # the second half lands while no query is running
+        run.write(ev.filter(F.col("event_id") % 2 == 1).coalesce(1))
+        return run_from_checkpoint()
 
 
 @register("q_scc_fb", oracle=_SCC_ORACLE)

@@ -9,17 +9,11 @@ permutes and the driver row hash-checks against plain window SQL.
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import t
-
-_SEQ = itertools.count()
 
 _TOPK_K = 5
 
@@ -55,32 +49,23 @@ def q_stream_topk_parity(spark, sf_dir):
     leaderboards (top documents by quality score, top URLs by spam
     signal) with state independent of stream length."""
     from incubator_flink_old_spark.streaming import (
+        replay_run,
         run_stream_to_memory,
         stateful_topk,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_topk_src_")
-    try:
-        (
+    schema = "event_type string, event_id long, value double"
+    with replay_run(spark, schema) as run:
+        run.write(
             t(spark, sf_dir, "events")
             .select("event_type", "event_id", "value")
             .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
         )
-        stream = (
-            spark.readStream.schema(
-                "event_type string, event_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        tbl = run_stream_to_memory(
+            stateful_topk(run.stream(), k=_TOPK_K),
+            "update",
+            state_partitions=4,
         )
-        out = stateful_topk(stream, k=_TOPK_K)
-        name = f"stream_topk_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "update", state_partitions=4)
-        tbl = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("event_type")
     return (
         tbl.withColumn("mx", F.max("seen").over(w))
@@ -496,7 +481,14 @@ def q_stream_pq_encode_parity(spark, sf_dir):
         _PQ_ITERS,
         _PQ_M,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.queries._util import (
+        VEC_SCHEMA,
+        vec_id_thirds,
+    )
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _PQ_DELTA_MOD != _PQ_DELTA_REM
@@ -507,37 +499,12 @@ def q_stream_pq_encode_parity(spark, sf_dir):
         iters=_PQ_ITERS,
     )
     book_rows = books.collect()  # m*n_centroids rows — bounded by design
-
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
-        )
-    src = tempfile.mkdtemp(prefix="t2_stream_pq_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = grid_pq_encode_map(stream, book_rows, m=_PQ_M)
-        name = f"stream_pq_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).select("vec_id", "j", "code", "qerr")
+    with replay_run(spark, VEC_SCHEMA) as run:
+        run.write(*vec_id_thirds(delta))
+        out = grid_pq_encode_map(run.stream(), book_rows, m=_PQ_M)
+        sink = run_stream_to_memory(out, "append", state_partitions=None)
+    return sink.select("vec_id", "j", "code", "qerr")
 
 
 # --------------------------------------------------------------------------
@@ -605,44 +572,26 @@ def q_stream_sq8_encode_parity(spark, sf_dir):
         _grid_vec,
         _sq_bounds,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.queries._util import (
+        VEC_SCHEMA,
+        vec_id_thirds,
+    )
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _PQ_DELTA_MOD != _PQ_DELTA_REM
     bounds_rows = _sq_bounds(
         emb.filter(is_base).select("vec_id", _grid_vec().alias("k"))
     ).collect()  # 64 rows — bounded by design
-
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
-        )
-    src = tempfile.mkdtemp(prefix="t2_stream_sq8_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = sq8_encode_map(stream, bounds_rows, levels=_SQ_LEVELS)
-        name = f"stream_sq8_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).select("vec_id", "p", "c")
+    with replay_run(spark, VEC_SCHEMA) as run:
+        run.write(*vec_id_thirds(delta))
+        out = sq8_encode_map(run.stream(), bounds_rows, levels=_SQ_LEVELS)
+        sink = run_stream_to_memory(out, "append", state_partitions=None)
+    return sink.select("vec_id", "p", "c")
 
 
 # --------------------------------------------------------------------------
@@ -679,13 +628,17 @@ def q_stream_cdc_parity(spark, sf_dir):
     stream; emissions are one row per key per batch and the readback
     scans emissions, never the log."""
     from incubator_flink_old_spark.streaming import (
+        replay_run,
         run_stream_to_memory,
         stateful_latest,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_cdc_src_")
-    try:
-        (
+    schema = (
+        "user_id long, ts_us long, event_id long, "
+        "event_type string, value double"
+    )
+    with replay_run(spark, schema) as run:
+        run.write(
             t(spark, sf_dir, "events")
             .select(
                 "user_id",
@@ -695,19 +648,7 @@ def q_stream_cdc_parity(spark, sf_dir):
                 "value",
             )
             .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
         )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts_us long, event_id long, "
-                "event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = stateful_latest(stream)
-        name = f"stream_cdc_{next(_SEQ)}"
         # state_partitions=16: the pandas-state rows keyed by user_id are
         # PYTHON-WORKER bound (wall ~= ert >> cpu — ~1.5k fn calls per
         # batch serialized state_partitions-wide), the opposite regime
@@ -716,10 +657,9 @@ def q_stream_cdc_parity(spark, sf_dir):
         # 6.4/4.5/3.8/4.4 s stream wall on this shape; 16 is the
         # crossover before per-store fixed cost wins. Partitioning never
         # changes results (boundary-invariance laws green).
-        run_stream_to_memory(out, name, "update", state_partitions=16)
-        tbl = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        tbl = run_stream_to_memory(
+            stateful_latest(run.stream()), "update", state_partitions=16
+        )
     w = Window.partitionBy("user_id")
     return (
         tbl.withColumn("mx", F.max("seen").over(w))

@@ -8,16 +8,10 @@ on both axes for all four tiers (IVF, PQ, SQ8, prefix).
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import t
-
-_SEQ = itertools.count()
 
 # --------------------------------------------------------------------------
 # Drift-gated coarse-tier retrain: the maintenance loop's recovery path as a
@@ -364,8 +358,15 @@ def q_stream_lifecycle_parity(spark, sf_dir):
         _sq_bounds,
         _sq_codes,
     )
+    from incubator_flink_old_spark.queries._util import (
+        VEC_SCHEMA,
+        vec_id_thirds,
+    )
     from incubator_flink_old_spark.queries.llm_ops26 import _hybrid_topk
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     docs = t(spark, sf_dir, "documents")
@@ -381,50 +382,22 @@ def q_stream_lifecycle_parity(spark, sf_dir):
     # The delta arrives as a REAL multi-batch stream; each replay runs
     # one pure-map encoder (same source files, two landing tables).
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
-        )
-    src = tempfile.mkdtemp(prefix="t2_stream_lc_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream_of = lambda: (  # noqa: E731 — two replays, one schema
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        n = next(_SEQ)
-        assign_name = f"stream_lc_assign_{n}"
-        run_stream_to_memory(
-            grid_assign_map(stream_of(), center_rows),
-            assign_name,
+    with replay_run(spark, VEC_SCHEMA) as run:
+        run.write(*vec_id_thirds(delta))
+        assigned = run_stream_to_memory(
+            grid_assign_map(run.stream(), center_rows),
             "append",
             state_partitions=None,
         )
-        codes_name = f"stream_lc_sq8_{n}"
-        run_stream_to_memory(
-            sq8_encode_map(stream_of(), bounds_rows, levels=_SQ_LEVELS),
-            codes_name,
+        codes = run_stream_to_memory(
+            sq8_encode_map(run.stream(), bounds_rows, levels=_SQ_LEVELS),
             "append",
             state_partitions=None,
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
     # IVF maintained: base cells ∪ the STREAMED assignments
     mcells = bcells.select("vec_id", "cell").unionByName(
-        spark.table(assign_name).select("vec_id", "cell")
+        assigned.select("vec_id", "cell")
     )
     # SQ8 maintained: base encode (frozen bounds; encoding is per-row
     # pure, so base-encode ∪ delta-encode ≡ the batch row's one union
@@ -436,8 +409,7 @@ def q_stream_lifecycle_parity(spark, sf_dir):
         clamp=True,
     )
     delta_codes = (
-        spark.table(codes_name)
-        .groupBy("vec_id")
+        codes.groupBy("vec_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("p", "c"))),
@@ -741,42 +713,25 @@ def q_stream_neardup_screen_parity(spark, sf_dir):
     from incubator_flink_old_spark.operators.text import (
         streaming_neardup_screen,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
-    corpus = docs.filter(~is_new)
-    arts: list = []  # persisted corpus artifacts; released in finally
-    src = tempfile.mkdtemp(prefix="t2_stream_nds_")
-    try:
-        (
-            docs.filter(is_new)
-            .select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    with replay_run(spark, "doc_id long, text string") as run:
+        run.write(docs.filter(is_new).select("doc_id", "text").repartition(4))
         out = streaming_neardup_screen(
-            stream,
-            corpus,
+            run.stream(),
+            docs.filter(~is_new),
             num_hashes=_NDS_HASHES,
             band_size=_NDS_BAND,
             jaccard_threshold=_NDS_THRESHOLD,
             materialize_static=True,
-            artifact_registry=arts,
+            artifact_registry=run.pins,
         )
-        name = f"stream_nds_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        for a in arts:
-            a.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
+        tbl = run_stream_to_memory(out, "append", state_partitions=4)
     return tbl.select("doc_a", "doc_b", "jaccard")
 
 
@@ -824,7 +779,14 @@ def q_stream_drift_audit_parity(spark, sf_dir):
         _PQ_ITERS,
         _PQ_M,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.queries._util import (
+        VEC_SCHEMA,
+        vec_id_thirds,
+    )
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _D_MOD != _D_REM
@@ -835,44 +797,18 @@ def q_stream_drift_audit_parity(spark, sf_dir):
         iters=_PQ_ITERS,
     )
     book_rows = books.collect()  # m*n_centroids rows — bounded by design
-
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
-        )
-    src = tempfile.mkdtemp(prefix="t2_stream_audit_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    with replay_run(spark, VEC_SCHEMA) as run:
+        run.write(*vec_id_thirds(delta))
         audit = (
-            grid_pq_encode_map(stream, book_rows, m=_PQ_M)
+            grid_pq_encode_map(run.stream(), book_rows, m=_PQ_M)
             .groupBy("j", "code")
             .agg(
                 F.count(F.lit(1)).alias("n_delta"),
                 F.sum("qerr").alias("qerr"),
             )
         )
-        name = f"stream_audit_{next(_SEQ)}"
-        run_stream_to_memory(audit, name, "complete", state_partitions=4)
-        out = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        out = run_stream_to_memory(audit, "complete", state_partitions=4)
     return out.select("j", "code", "n_delta", "qerr")
 
 
@@ -922,28 +858,19 @@ def q_stream_bm25_stats_parity(spark, sf_dir):
         streaming_bm25_stats,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import _TS_TERMS
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     docs = t(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp(prefix="t2_stream_bm25_")
-    try:
-        (
-            docs.select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
+    with replay_run(spark, "doc_id long, text string") as run:
+        run.write(docs.select("doc_id", "text").repartition(4))
+        stats_row = run_stream_to_memory(
+            streaming_bm25_stats(run.stream(), _TS_TERMS),
+            "complete",
+            state_partitions=4,
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_bm25_stats(stream, _TS_TERMS)
-        name = f"stream_bm25_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "complete", state_partitions=4)
-        stats_row = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
     # Reassemble the (scalars, dft) pair the scorer injects: avgdl from
     # the landed longs (merge_bm25_stats' division shape and its n=0
@@ -1015,43 +942,28 @@ def q_stream_prefix_encode_parity(spark, sf_dir):
     from incubator_flink_old_spark.operators.similarity import (
         prefix_encode_map,
     )
+    from incubator_flink_old_spark.queries._util import (
+        VEC_SCHEMA,
+        vec_id_thirds,
+    )
     from incubator_flink_old_spark.queries.llm_ops27 import _MRL_DIM
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     delta = emb.filter(F.col("vec_id") % _D_MOD == _D_REM).select(
         "vec_id", "embedding"
     )
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
+    with replay_run(spark, VEC_SCHEMA) as run:
+        run.write(*vec_id_thirds(delta))
+        out = run_stream_to_memory(
+            prefix_encode_map(run.stream(), prefix=_MRL_DIM),
+            "append",
+            state_partitions=None,
         )
-    src = tempfile.mkdtemp(prefix="t2_stream_pfx_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = prefix_encode_map(stream, prefix=_MRL_DIM)
-        name = f"stream_pfx_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return (
-        spark.table(name)
-        .select("vec_id", F.posexplode("pk").alias("p0", "v"))
+        out.select("vec_id", F.posexplode("pk").alias("p0", "v"))
         .select("vec_id", (F.col("p0") + 1).alias("p"), "v")
     )

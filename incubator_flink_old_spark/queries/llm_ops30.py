@@ -12,9 +12,7 @@ stitched DuckDB oracle.
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
+import datetime
 
 from pyspark.sql import functions as F
 
@@ -35,9 +33,36 @@ from incubator_flink_old_spark.queries.llm_ops29 import (
     _stream_winnow_oracle,
 )
 
-_SEQ = itertools.count()
-
 _GATE_LANGS = ("en", "de", "fr")
+
+#: Schema of the gate rows' document replay (:func:`_gate_replay`).
+_GATE_SCHEMA = "doc_id long, text string, lang string, ts timestamp"
+
+
+def _gate_replay(run, docs):
+    """Replay ``docs`` (doc_id, text, lang) through ``run`` as the gate
+    rows' crawl: ingest time ts = 2024-01-01 + doc_id seconds, three
+    files in event-time order, then two sentinel arrivals (doc −1/−2,
+    one and two hours past the last real ts). The sentinels push the
+    watermark past every real document (applied-one-to-two-batches-
+    later rule), so the append-mode gate fold emits all real verdicts
+    in DATA batches instead of racing the no-data flush; rows filter
+    them out with ``doc_id >= 0``. Returns the replay stream."""
+    from incubator_flink_old_spark.streaming import write_event_time_replay
+
+    arrivals = docs.select(
+        "doc_id",
+        "text",
+        "lang",
+        F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
+    )
+    write_event_time_replay(arrivals, run.src, n_files=3)
+    mx = arrivals.agg(F.max("ts")).collect()[0][0]
+    for i in (1, 2):
+        run.append_rows(
+            [(-i, "the of and to a", "en", mx + datetime.timedelta(hours=i))]
+        )
+    return run.stream()
 
 
 def _ingest_gate_oracle(
@@ -178,52 +203,16 @@ def q_stream_ingest_gate_parity(spark, sf_dir):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.streaming import (
+        replay_run,
         run_stream_to_memory,
-        write_event_time_replay,
     )
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
-    corpus = docs.filter(~is_new)
-    arts: list = []  # persisted corpus artifacts; released in finally
-    src = tempfile.mkdtemp(prefix="t2_stream_gate_")
-    try:
-        new_docs = docs.filter(is_new).select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(new_docs, src, n_files=3)
-        # Two sentinel arrivals push the watermark past every real
-        # document (applied-one-to-two-batches-later rule), forcing the
-        # append-mode aggregation to emit all real verdicts in DATA
-        # batches instead of racing the no-data flush.
-        mx = new_docs.agg(F.max("ts")).collect()[0][0]
-        import datetime
-
-        from incubator_flink_old_spark.streaming import append_literal_rows
-
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [(-i, "the of and to a", "en", mx + datetime.timedelta(hours=i))],
-                "doc_id long, text string, lang string, ts timestamp",
-            )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    with replay_run(spark, _GATE_SCHEMA) as run:
         out = streaming_ingest_gate(
-            stream,
-            corpus,
+            _gate_replay(run, docs.filter(is_new)),
+            docs.filter(~is_new),
             langs=_GATE_LANGS,
             num_hashes=_NDS_HASHES,
             band_size=_NDS_BAND,
@@ -234,20 +223,10 @@ def q_stream_ingest_gate_parity(spark, sf_dir):
             event_time="ts",
             watermark_delay="30 seconds",
             materialize_static=True,
-            artifact_registry=arts,
+            artifact_registry=run.pins,
         )
-        name = f"stream_gate_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for a in arts:
-            a.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+        tbl = run_stream_to_memory(out, "append", state_partitions=4)
+    return tbl.filter(F.col("doc_id") >= 0)
 
 
 # --------------------------------------------------------------------------

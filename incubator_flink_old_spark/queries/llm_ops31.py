@@ -31,6 +31,8 @@ from incubator_flink_old_spark.queries.llm_ops29 import (
 )
 from incubator_flink_old_spark.queries.llm_ops30 import (
     _GATE_LANGS,
+    _GATE_SCHEMA,
+    _gate_replay,
     _ingest_gate_oracle,
 )
 
@@ -516,11 +518,6 @@ def q_token_budget_schedule(spark, sf_dir):
 # Streaming absorb parity: the MERGED artifacts serve the live crawl
 # --------------------------------------------------------------------------
 
-import itertools as _itertools
-
-_SEQ31 = _itertools.count()
-
-
 def _stream_absorb_oracle() -> str:
     """Wave 2 of the absorb oracle, alone: the streamed gate emits the
     same verdicts whatever the batch boundaries (every evidence event
@@ -571,12 +568,6 @@ def q_stream_absorb_parity(spark, sf_dir):
     Scale: per-batch cost is the map-side gates plus O(batch
     candidates) probe joins against the persisted merged artifacts;
     state is one row per in-flight document, watermark-evicted."""
-    import datetime
-    import shutil
-    import tempfile
-
-    from pyspark.storagelevel import StorageLevel
-
     from incubator_flink_old_spark.operators.text import (
         merge_winnow_stats,
         neardup_corpus_artifacts,
@@ -584,10 +575,8 @@ def q_stream_absorb_parity(spark, sf_dir):
         winnow_corpus_index,
     )
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
-        force_pins,
+        replay_run,
         run_stream_to_memory,
-        write_event_time_replay,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -608,13 +597,10 @@ def q_stream_absorb_parity(spark, sf_dir):
         corpus0, num_hashes=_NDS_HASHES, band_size=_NDS_BAND
     )
     fps0, stats0 = winnow_corpus_index(corpus0, k=_WIN_K, w=_WIN_W)
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (toks0, bands0, fps0, stats0)
-    ]
-    toks0, bands0, fps0, stats0 = pinned
-    src = tempfile.mkdtemp(prefix="t2_stream_absorb_")
-    try:
+    with replay_run(spark, _GATE_SCHEMA) as run:
+        toks0, bands0, fps0, stats0 = run.pin(toks0, bands0, fps0, stats0)
+        # Wave 1's verdicts feed all four merged artifacts: pinned so
+        # the wave-1 gate runs once, not once per artifact.
         g1 = streaming_ingest_gate(
             wave1,
             None,
@@ -624,7 +610,6 @@ def q_stream_absorb_parity(spark, sf_dir):
             },
             **kw,
         ).localCheckpoint(eager=True)
-        pinned.append(g1)
         admitted1 = wave1.join(
             g1.filter(
                 F.col("quality_ok")
@@ -637,80 +622,25 @@ def q_stream_absorb_parity(spark, sf_dir):
             admitted1, num_hashes=_NDS_HASHES, band_size=_NDS_BAND
         )
         fps_d, stats_d = winnow_corpus_index(admitted1, k=_WIN_K, w=_WIN_W)
-        merged = {
-            "neardup": (
-                toks0.unionByName(toks_d),
-                bands0.unionByName(bands_d),
-            ),
-            "span": (
-                fps0.unionByName(fps_d),
-                merge_winnow_stats(stats0, stats_d),
-            ),
-        }
         # Pin the merged static sides once: the stream-static joins
         # re-evaluate the static plan per micro-batch otherwise (the
         # materialize_static lesson, applied to supplied artifacts).
-        for name in merged:
-            a, b = merged[name]
-            a, b = (
-                a.persist(StorageLevel.DISK_ONLY),
-                b.persist(StorageLevel.DISK_ONLY),
-            )
-            merged[name] = (a, b)
-            pinned.extend((a, b))
-        # Force the merged pins at the session's batch width — lazy,
-        # they'd build inside micro-batch 0 at the clamped state width
-        # (optimization round 12; see streaming.force_pins).
-        force_pins(*[f for pair in merged.values() for f in pair])
-        stream_src = wave2.select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(stream_src, src, n_files=3)
-        mx = stream_src.agg(F.max("ts")).collect()[0][0]
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [
-                    (
-                        -i,
-                        "the of and to a",
-                        "en",
-                        mx + datetime.timedelta(hours=i),
-                    )
-                ],
-                "doc_id long, text string, lang string, ts timestamp",
-            )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        toks1, bands1, fps1, stats1 = run.pin(
+            toks0.unionByName(toks_d),
+            bands0.unionByName(bands_d),
+            fps0.unionByName(fps_d),
+            merge_winnow_stats(stats0, stats_d),
         )
         out = streaming_ingest_gate(
-            stream,
+            _gate_replay(run, wave2),
             None,
-            corpus_artifacts=merged,
+            corpus_artifacts={
+                "neardup": (toks1, bands1),
+                "span": (fps1, stats1),
+            },
             event_time="ts",
             watermark_delay="30 seconds",
             **kw,
         )
-        name = f"stream_absorb_{next(_SEQ31)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for f in pinned:
-            f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+        tbl = run_stream_to_memory(out, "append", state_partitions=4)
+    return tbl.filter(F.col("doc_id") >= 0)

@@ -14,8 +14,6 @@ the assignment from the union.
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
@@ -29,6 +27,8 @@ from incubator_flink_old_spark.queries.llm_ops28 import (
 )
 from incubator_flink_old_spark.queries.llm_ops30 import (
     _GATE_LANGS,
+    _GATE_SCHEMA,
+    _gate_replay,
     _ingest_gate_oracle,
 )
 from incubator_flink_old_spark.queries.llm_ops31 import (
@@ -38,8 +38,6 @@ from incubator_flink_old_spark.queries.llm_ops31 import (
     _SEM_THRESHOLD,
     _semantic_gate_oracle,
 )
-
-_SEQ32 = _itertools.count()
 
 
 @register("q_stream_semantic_gate_parity", oracle=_semantic_gate_oracle())
@@ -73,12 +71,6 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
     literal-array work map-side plus a partition-pruned fetch of
     n_probe cells — O(corpus/n_cells · n_probe), never the corpus;
     state stays one row per in-flight document, watermark-evicted."""
-    import datetime
-    import shutil
-    import tempfile
-
-    from pyspark.storagelevel import StorageLevel
-
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
         semantic_screen_events_map,
@@ -87,78 +79,35 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
-        force_pins,
+        replay_run,
         run_stream_to_memory,
-        write_event_time_replay,
     )
 
     docs = t(spark, sf_dir, "documents")
     emb = t(spark, sf_dir, "embeddings")
     new_d = F.col("doc_id") % _D_MOD == _D_REM
     new_v = F.col("vec_id") % _D_MOD == _D_REM
-    corpus = docs.filter(~new_d)
-    pinned: list = []
-    arts: list = []
-    src = tempfile.mkdtemp(prefix="t2_stream_semgate_")
-    try:
+    with replay_run(spark, _GATE_SCHEMA) as run:
         # The standing semantic index, trained once batch-side; the
         # centers collect is bounded (_SEM_CELLS = 8 rows — the
         # literal-array probe's contract). cells + corpus vectors are
         # the frozen stream-static serve artifacts: pinned DISK_ONLY
-        # once so micro-batches read blocks, not plans.
+        # once so micro-batches read blocks, not plans. New-side
+        # embeddings are the stream-static lookup that attaches each
+        # arrival's vector (vec_id = doc_id, the hybrid linkage).
         corpus_emb = emb.filter(~new_v).select("vec_id", "embedding")
         cells, centers = grid_ivf(
             corpus_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS
         )
         centers_rows = centers.collect()  # bounded: n_cells rows
-        cells = cells.persist(StorageLevel.DISK_ONLY)
-        corpus_emb = corpus_emb.persist(StorageLevel.DISK_ONLY)
-        # New-side embeddings: the stream-static lookup that attaches
-        # each arrival's vector (vec_id = doc_id, the hybrid linkage).
-        nemb = (
-            emb.filter(new_v)
-            .select(F.col("vec_id").alias("doc_id"), "embedding")
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        pinned += [cells, corpus_emb, nemb]
-        # Force the serve pins at the session's batch width — lazy,
-        # they'd build inside micro-batch 0 at the clamped state width
-        # (optimization round 12; see streaming.force_pins).
-        force_pins(cells, corpus_emb, nemb)
-
-        stream_src = docs.filter(new_d).select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
+        cells, corpus_emb, nemb = run.pin(
+            cells,
+            corpus_emb,
+            emb.filter(new_v).select(
+                F.col("vec_id").alias("doc_id"), "embedding"
             ),
         )
-        write_event_time_replay(stream_src, src, n_files=3)
-        mx = stream_src.agg(F.max("ts")).collect()[0][0]  # 1-row finish
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [
-                    (
-                        -i,
-                        "the of and to a",
-                        "en",
-                        mx + datetime.timedelta(hours=i),
-                    )
-                ],
-                "doc_id long, text string, lang string, ts timestamp",
-            )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+        stream = _gate_replay(run, docs.filter(new_d))
         # The streaming semantic screen: events derive FROM the stream
         # (the extra_screens key-domain contract holds by construction)
         # via a stream-static inner join to the new-side embeddings,
@@ -181,7 +130,7 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
         ).select("doc_a", "ts")
         out = streaming_ingest_gate(
             stream,
-            corpus,
+            docs.filter(~new_d),
             langs=_GATE_LANGS,
             num_hashes=_NDS_HASHES,
             band_size=_NDS_BAND,
@@ -191,20 +140,10 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
             event_time="ts",
             watermark_delay="30 seconds",
             materialize_static=True,
-            artifact_registry=arts,
+            artifact_registry=run.pins,
         )
-        name = f"stream_semgate_{next(_SEQ32)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for f in pinned + arts:
-            f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+        tbl = run_stream_to_memory(out, "append", state_partitions=4)
+    return tbl.filter(F.col("doc_id") >= 0)
 
 
 # --------------------------------------------------------------------------
@@ -707,12 +646,6 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
     partition-pruned fetch of n_probe cells against the DISK_ONLY-
     pinned merged artifacts; state is one row per in-flight document,
     watermark-evicted."""
-    import datetime
-    import shutil
-    import tempfile
-
-    from pyspark.storagelevel import StorageLevel
-
     from incubator_flink_old_spark.operators.similarity import (
         grid_assign,
         grid_ivf,
@@ -723,10 +656,8 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
-        force_pins,
+        replay_run,
         run_stream_to_memory,
-        write_event_time_replay,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -740,13 +671,8 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         corpus0_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS
     )
     centers_rows = centers.collect()  # bounded: n_cells rows
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (cells0, centers, corpus0_emb)
-    ]
-    cells0, centers, corpus0_emb = pinned
-    src = tempfile.mkdtemp(prefix="t2_stream_semabsorb_")
-    try:
+    with replay_run(spark, _GATE_SCHEMA) as run:
+        cells0, centers, corpus0_emb = run.pin(cells0, centers, corpus0_emb)
         # Batch wave-1 gate + absorb (the q_semantic_absorb_parity
         # path verbatim: frozen centers, O(wave) delta append).
         sem1 = (
@@ -776,7 +702,6 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
             screens=(),
             extra_screens={"semdup": sem1},
         ).localCheckpoint(eager=True)
-        pinned.append(g1)
         adm1_emb = w1_emb.join(
             g1.filter(
                 F.col("quality_ok")
@@ -788,55 +713,16 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         # The merged static sides, pinned ONCE (stream-static joins
         # re-evaluate unpinned static plans per micro-batch — the
         # materialize_static lesson applied to absorbed artifacts).
-        cells1 = cells0.unionByName(
-            grid_assign(adm1_emb, centers)
-        ).persist(StorageLevel.DISK_ONLY)
-        emb1 = corpus0_emb.unionByName(adm1_emb).persist(
-            StorageLevel.DISK_ONLY
+        cells1, emb1 = run.pin(
+            cells0.unionByName(grid_assign(adm1_emb, centers)),
+            corpus0_emb.unionByName(adm1_emb),
         )
-        pinned += [cells1, emb1]
-        # Force the absorbed serve pins at the session's batch width
-        # (optimization round 12; see streaming.force_pins). nemb2 is
-        # forced below, right after its own persist.
-        force_pins(cells1, emb1)
-
-        w2_stream_src = docs.filter(m5d == 4).select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(w2_stream_src, src, n_files=3)
-        mx = w2_stream_src.agg(F.max("ts")).collect()[0][0]  # 1-row finish
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [
-                    (
-                        -i,
-                        "the of and to a",
-                        "en",
-                        mx + datetime.timedelta(hours=i),
-                    )
-                ],
-                "doc_id long, text string, lang string, ts timestamp",
+        stream = _gate_replay(run, docs.filter(m5d == 4))
+        [nemb2] = run.pin(
+            emb.filter(m5v == 4).select(
+                F.col("vec_id").alias("doc_id"), "embedding"
             )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
         )
-        nemb2 = emb.filter(m5v == 4).select(
-            F.col("vec_id").alias("doc_id"), "embedding"
-        ).persist(StorageLevel.DISK_ONLY)
-        pinned.append(nemb2)
-        force_pins(nemb2)
         sem2 = semantic_screen_events_map(
             stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
                 nemb2.select(F.col("doc_id").alias("vec_id"), "embedding"),
@@ -858,15 +744,5 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
             event_time="ts",
             watermark_delay="30 seconds",
         )
-        name = f"stream_semabsorb_{next(_SEQ32)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for f in pinned:
-            f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+        tbl = run_stream_to_memory(out, "append", state_partitions=4)
+    return tbl.filter(F.col("doc_id") >= 0)

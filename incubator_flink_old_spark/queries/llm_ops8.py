@@ -9,8 +9,6 @@ streaming one, whose bounded replay must equal the batch SQL exactly.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -164,8 +162,6 @@ def q_count_min(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Streaming batch parity — the driver-checkable Structured Streaming row
 # --------------------------------------------------------------------------
-_STREAM_SEQ = itertools.count()
-
 
 @register(
     "q_stream_window_parity",
@@ -209,9 +205,7 @@ def q_stream_window_parity(spark, sf_dir):
             "total_value",
         )
     )
-    name = f"stream_parity_{next(_STREAM_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return run_stream_to_memory(agg, "complete")
 
 
 # --------------------------------------------------------------------------

@@ -143,16 +143,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _NANOS_TS_COLUMNS = frozenset({"ts"})
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL entry point."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_text(spark: SparkSession, path: str) -> DataFrame:
     """S1: TextInputFormat — lines of a file as single-string records.
 

@@ -17,6 +17,13 @@ forever, so ``with_watermark`` is mandatory in the streaming forms.
 
 from __future__ import annotations
 
+import itertools
+import os
+import shutil
+import tempfile
+import time
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -241,26 +248,60 @@ def force_pins(*frames: DataFrame) -> None:
     pool (guide §2.6 — overlap independent jobs: Spark's scheduler
     happily runs several jobs at once, and each pin's tail would
     otherwise leave the cluster idle while the next pin waits;
-    optimization round 13). FIFO scheduling back-fills freed slots."""
+    optimization round 13). FIFO scheduling back-fills freed slots.
+    Pool threads inherit the caller's local properties (job group,
+    description, tags), so the pins' jobs stay attributed to the
+    caller; the first failing pin raises as soon as it fails."""
     if len(frames) <= 1:
         for f in frames:
             f.count()
         return
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
-    with ThreadPoolExecutor(max_workers=min(4, len(frames))) as pool:
-        list(pool.map(lambda f: f.count(), frames))
+    from pyspark.util import inheritable_thread_target
+
+    def count(f: DataFrame) -> int:
+        return f.count()
+
+    # Pinned-thread mode (the default) returns a wrapper that carries the
+    # caller's properties and tags into the pool thread. With pinning off
+    # local properties are not per Python thread, and the call returns
+    # the session itself: there is nothing to carry.
+    wrap = inheritable_thread_target(frames[0].sparkSession)
+    if callable(wrap):
+        count = wrap(count)
+    pool = ThreadPoolExecutor(max_workers=min(4, len(frames)))
+    try:
+        for done in as_completed([pool.submit(count, f) for f in frames]):
+            done.result()
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
+
+
+#: Memory-sink names; every sink's temp view is dropped before the runner
+#: returns, so names only need to be unique among live queries.
+_SINKS = itertools.count()
 
 
 def run_stream_to_memory(
     stream_df: DataFrame,
-    query_name: str,
     output_mode: str,
     state_partitions: int | None = 8,
-):
-    """Drive a bounded streaming query to completion synchronously
-    (memory sink; for tests/smoke — production sinks are files/kafka via
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Drive a bounded streaming query to completion synchronously into
+    a memory sink and return the sink's rows as a DataFrame (for
+    tests/parity rows — production sinks are files/kafka via
     writeStream with checkpointLocation).
+
+    The runner names the sink itself and drops its temp view before
+    returning: the returned frame's plan holds the sink's rows, so it
+    stays readable after the view is gone (and after the replay source
+    is deleted), and nothing is left in the caller's catalog. The
+    stopped query handle rides along as ``.stream_query`` so
+    ``lastProgress``/``recentProgress`` (state-operator metrics) stay
+    reachable. ``checkpoint`` sets ``checkpointLocation`` — a query
+    restarted on the same location resumes its offsets and state.
 
     ``state_partitions`` sizes the stateful-operator partitioning
     (Structured Streaming pins ``spark.sql.shuffle.partitions`` into the
@@ -275,22 +316,26 @@ def run_stream_to_memory(
     the session's current width. The session conf is restored after the
     run (start() has already captured it)."""
     spark = stream_df.sparkSession
+    name = f"t2_sink_{next(_SINKS)}"
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     if state_partitions is not None:
         spark.conf.set(key, str(state_partitions))
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return q
+        writer = stream_df.writeStream.outputMode(output_mode).format("memory")
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        q = writer.queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        sink = spark.table(name)
     finally:
         spark.conf.set(key, prev)
+        spark.catalog.dropTempView(name)
+    sink.stream_query = q
+    return sink
 
 
 def interval_join(
@@ -345,8 +390,6 @@ def idempotent_parquet_sink(path: str):
         stream.writeStream.foreachBatch(idempotent_parquet_sink(out))
               .option("checkpointLocation", ckpt).start()
     """
-    import os
-
     def write_batch(df: DataFrame, batch_id: int) -> None:
         target = os.path.join(path, f"batch_id={batch_id}")
         marker = os.path.join(target, "_COMMITTED")
@@ -361,8 +404,6 @@ def idempotent_parquet_sink(path: str):
 def read_committed(spark: SparkSession, path: str) -> DataFrame:
     """Read back ONLY committed epochs of an idempotent_parquet_sink
     output (uncommitted = a crashed attempt's partial data)."""
-    import os
-
     dirs = [
         os.path.join(path, d)
         for d in sorted(os.listdir(path))
@@ -840,6 +881,26 @@ def stateful_latest(
     )
 
 
+def _append_files(path: str, frame: DataFrame) -> None:
+    """Append ``frame`` to the replay directory ``path`` and stamp the
+    parquet files it adds strictly ABOVE every file already there, so a
+    maxFilesPerTrigger=1 file stream (which replays oldest-modtime-first)
+    replays the appends in call order with no inter-write sleep — the
+    q_stream_asof_parity ``os.utime`` recipe, centralized (optimization
+    round 12: sleeps between replay writes were pure scaffolding wall).
+    """
+    before: dict[str, float] = {}
+    if os.path.isdir(path):
+        for f in os.listdir(path):
+            if f.endswith(".parquet"):
+                before[f] = os.path.getmtime(os.path.join(path, f))
+    frame.write.mode("append").parquet(path)
+    ts = max(max(before.values(), default=0.0) + 0.05, time.time())
+    for f in os.listdir(path):
+        if f.endswith(".parquet") and f not in before:
+            os.utime(os.path.join(path, f), (ts, ts))
+
+
 def append_literal_rows(spark, path: str, rows, schema: str) -> None:
     """Append a handful of LITERAL rows (watermark sentinels, cap rows)
     to a replay directory as one tiny parquet file — via a
@@ -852,17 +913,8 @@ def append_literal_rows(spark, path: str, rows, schema: str) -> None:
     Row arity is CHECKED against the schema (review finding): a silent
     zip would write a short row whose missing column reads back NULL —
     e.g. a NULL event-time sentinel that never advances the watermark,
-    hanging the replay instead of failing at write time.
-
-    The new file's mtime is stamped strictly ABOVE every parquet file
-    already in ``path`` (the maxFilesPerTrigger file source replays in
-    modtime order), so back-to-back appends need no inter-call sleep —
-    the q_stream_asof_parity ``os.utime`` recipe, centralized
-    (optimization round 12: the 0.2 s sleeps per sentinel across the
-    replay-parity rows were pure scaffolding wall)."""
-    import os
-    import time
-
+    hanging the replay instead of failing at write time. The new file
+    replays after every file already in ``path``."""
     if not rows:
         raise ValueError("append_literal_rows: rows is empty")
     fields = spark.createDataFrame([], schema).schema.fields
@@ -880,64 +932,101 @@ def append_literal_rows(spark, path: str, rows, schema: str) -> None:
             ]
         )
         frame = one if frame is None else frame.unionByName(one)
-    before: dict[str, float] = {}
-    if os.path.isdir(path):
-        for f in os.listdir(path):
-            if f.endswith(".parquet"):
-                before[f] = os.path.getmtime(os.path.join(path, f))
-    frame.coalesce(1).write.mode("append").parquet(path)
-    ts = max(max(before.values(), default=0.0) + 0.05, time.time())
-    for f in os.listdir(path):
-        if f.endswith(".parquet") and f not in before:
-            os.utime(os.path.join(path, f), (ts, ts))
+    _append_files(path, frame.coalesce(1))
 
 
-def write_event_time_replay(
-    df,
-    path: str,
-    n_files: int = 4,
-    order_by: str = "doc_id",
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files split by ``order_by``
-    ntile, SEQUENTIALLY, so a maxFilesPerTrigger=1 file stream replays
-    them in that order (the file source replays oldest-modtime-first) —
-    the in-event-time-order regime a watermark models: a crawl's ingest
-    time is its arrival order. Shared by the watermark-parity rows,
-    their tests and the state probe (one copy of the load-bearing
-    invariant, per review). File order is enforced by stamping each
-    file group's mtime explicitly 50 ms apart (``os.utime``, the
-    q_stream_asof_parity recipe) instead of sleeping between writes —
-    optimization round 12: the 0.15 s/file sleeps summed to ~0.5 s of
-    pure scaffolding wall on every replay-parity row. Fixture-prep
-    helper — the cost is test scaffolding, never operator cost."""
-    import os
-    import time
-
+def write_event_time_replay(df, path: str, n_files: int) -> None:
+    """Write ``df`` as ``n_files`` parquet files split by ``doc_id``
+    ntile, in order, so a maxFilesPerTrigger=1 file stream replays them
+    in that order — the in-event-time-order regime a watermark models:
+    a crawl's ingest time is its arrival order. Shared by the
+    watermark-parity rows and their tests (one copy of the load-bearing
+    invariant, per review). Fixture-prep helper — the cost is test
+    scaffolding, never operator cost."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     # Pin the tiled frame ONCE: each per-file write otherwise re-runs
     # the source scan + global ntile sort (n_files full jobs — measured
     # ~45% of q_stream_ingest_gate_parity's wall at sf0.1, PERF.md
     # round 11). Eager checkpoint, released after the last write.
     tiled = df.withColumn(
-        "__b", F.ntile(n_files).over(Window.orderBy(order_by))
+        "__b", F.ntile(n_files).over(Window.orderBy("doc_id"))
     ).localCheckpoint(eager=True)
-    t0 = time.time()
     try:
-        seen: set[str] = set()
         for g in range(1, n_files + 1):
-            (
-                tiled.filter(F.col("__b") == g)
-                .drop("__b")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(path)
+            _append_files(
+                path, tiled.filter(F.col("__b") == g).drop("__b").coalesce(1)
             )
-            ts = t0 + (g - 1) * 0.05
-            for f in os.listdir(path):
-                if f.endswith(".parquet") and f not in seen:
-                    os.utime(os.path.join(path, f), (ts, ts))
-                    seen.add(f)
     finally:
         tiled.unpersist()
+
+
+class ReplayRun:
+    """One bounded file replay, as a parity row drives it: a fresh
+    replay directory (``src``, plus siblings from :meth:`path` for
+    checkpoints and side outputs), the maxFilesPerTrigger=1 parquet
+    reader over it for one DDL ``schema``, and the frames the row pins
+    for its stream-static joins. Use it through :func:`replay_run`,
+    which releases all of it on exit."""
+
+    def __init__(self, spark: SparkSession, schema: str) -> None:
+        self.spark = spark
+        self.schema = schema
+        self.base = tempfile.mkdtemp(prefix="t2_replay_")
+        self.src = os.path.join(self.base, "src")
+        #: Persisted frames unpersisted on exit; also the
+        #: ``artifact_registry`` the text screens register their pins in.
+        self.pins: list[DataFrame] = []
+
+    def path(self, name: str) -> str:
+        """A scratch path beside the replay source (checkpoints, sinks)."""
+        return os.path.join(self.base, name)
+
+    def write(self, *frames: DataFrame) -> None:
+        """Append each frame to the replay source as it is partitioned;
+        the stream replays them in argument order."""
+        for f in frames:
+            _append_files(self.src, f)
+
+    def append_rows(self, rows) -> None:
+        """Append literal rows (watermark sentinels) as one more file —
+        :func:`append_literal_rows` against this replay's schema."""
+        append_literal_rows(self.spark, self.src, rows, self.schema)
+
+    def stream(self) -> DataFrame:
+        """The replay as a stream, one file per micro-batch."""
+        return (
+            self.spark.readStream.schema(self.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(self.src)
+        )
+
+    def pin(self, *frames: DataFrame) -> list[DataFrame]:
+        """Persist ``frames`` DISK_ONLY and fill them now
+        (:func:`force_pins`); they are unpersisted when the run exits."""
+        from pyspark.storagelevel import StorageLevel
+
+        pinned = [f.persist(StorageLevel.DISK_ONLY) for f in frames]
+        self.pins.extend(pinned)
+        force_pins(*pinned)
+        return pinned
+
+
+@contextmanager
+def replay_run(spark: SparkSession, schema: str):
+    """The one way to drive a bounded file replay: yields a
+    :class:`ReplayRun` and, on exit, unpersists its pins and deletes its
+    directory. Results come out of :func:`run_stream_to_memory`, whose
+    frames hold their rows in the memory sink — they outlive the run::
+
+        with replay_run(spark, "doc_id long, text string") as run:
+            run.write(docs.repartition(4))
+            return run_stream_to_memory(screen(run.stream()), "append")
+    """
+    run = ReplayRun(spark, schema)
+    try:
+        yield run
+    finally:
+        for f in run.pins:
+            f.unpersist()
+        shutil.rmtree(run.base, ignore_errors=True)

@@ -269,11 +269,10 @@ def test_empty_stream_stateful_ops(spark):
             )
             .parquet(src)
         )
-        run_stream_to_memory(
-            stateful_topk(stream, k=3), "empty_topk", "update",
-            state_partitions=2,
+        sink = run_stream_to_memory(
+            stateful_topk(stream, k=3), "update", state_partitions=2
         )
-        assert spark.table("empty_topk").count() == 0
+        assert sink.count() == 0
     finally:
         shutil.rmtree(src, ignore_errors=True)
     src = tempfile.mkdtemp(prefix="t2_empty_cdc_")
@@ -291,10 +290,9 @@ def test_empty_stream_stateful_ops(spark):
             )
             .parquet(src)
         )
-        run_stream_to_memory(
-            stateful_latest(stream), "empty_cdc", "update",
-            state_partitions=2,
+        sink = run_stream_to_memory(
+            stateful_latest(stream), "update", state_partitions=2
         )
-        assert spark.table("empty_cdc").count() == 0
+        assert sink.count() == 0
     finally:
         shutil.rmtree(src, ignore_errors=True)

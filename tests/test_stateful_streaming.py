@@ -13,8 +13,7 @@ from incubator_flink_old_spark.streaming import (
 def test_stateful_session_stats_stream(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir)
     out = stateful_session_stats(stream, gap_seconds=300)
-    run_stream_to_memory(out, "stateful_sessions", "append")
-    rows = spark.sql("SELECT * FROM stateful_sessions").collect()
+    rows = run_stream_to_memory(out, "append").collect()
     # sessions close mid-stream (gap) — the fixture has inter-event gaps
     # well above 300s per user, so some closed sessions must be emitted
     assert rows, "expected closed sessions from the replayed fixture"
@@ -41,8 +40,7 @@ def test_stateful_heavy_hitters_exact_when_capacity_suffices(spark, sf_dir):
     out = stateful_heavy_hitters(
         stream, capacity=10_000, k=5, group="event_type", value="user_id"
     )
-    run_stream_to_memory(out, "hh_stream", "update")
-    got = spark.sql("SELECT * FROM hh_stream")
+    got = run_stream_to_memory(out, "update")
     # keep only the LAST emission per (group, value) — update mode
     # re-emits as state evolves across batches
     from pyspark.sql import Window
@@ -91,8 +89,7 @@ def test_stateful_heavy_hitters_bounded_state_overestimates(spark, sf_dir):
     out = stateful_heavy_hitters(
         stream, capacity=8, k=8, group="event_type", value="user_id"
     )
-    run_stream_to_memory(out, "hh_small", "update")
-    got = spark.sql("SELECT * FROM hh_small").collect()
+    got = run_stream_to_memory(out, "update").collect()
     assert got, "no emissions"
     true = {
         (r["event_type"], str(r["user_id"])): r["cnt"]

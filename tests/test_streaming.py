@@ -34,10 +34,10 @@ def test_stream_tumbling_equals_batch(spark, sf_dir, events_stream):
         F.count(F.lit(1)).alias("n_events"),
         dsum("value", "total_value"),
     )
-    run_stream_to_memory(agg, "stream_tumbling", "append")
+    sink = run_stream_to_memory(agg, "append")
     got = {
         (r["win_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM stream_tumbling").collect()
+        for r in sink.collect()
     }
 
     batch = tumbling_window(
@@ -77,8 +77,8 @@ def test_stream_dedup_watermark(spark, sf_dir, events_stream):
         "ts",
         "10 minutes",
     )
-    run_stream_to_memory(deduped, "stream_dedup", "append")
-    n_stream = spark.sql("SELECT count(*) AS n FROM stream_dedup").first()["n"]
+    sink = run_stream_to_memory(deduped, "append")
+    n_stream = sink.count()
 
     n_batch_keys = (
         load_table(spark, sf_dir, "events")
@@ -129,9 +129,9 @@ def test_stream_stream_interval_join(spark, sf_dir):
         & (F.col("v_ts") < F.col("p_ts")),
         "inner",
     )
-    run_stream_to_memory(joined, "ss_join", "append")
+    sink = run_stream_to_memory(joined, "append")
     got = {
-        (r["p_id"], r["v_id"]) for r in spark.sql("SELECT * FROM ss_join").collect()
+        (r["p_id"], r["v_id"]) for r in sink.collect()
     }
 
     # batch twin: the inner pairs of q_range_join's pre-aggregation
@@ -198,10 +198,10 @@ def test_stream_sliding_and_session_parity(spark, sf_dir):
         "ts", "1 hour", "30 minutes", [],
         F.count(F.lit(1)).alias("n"),
     )
-    run_stream_to_memory(slid, "stream_sliding", "append")
+    sink = run_stream_to_memory(slid, "append")
     got = {
         (r["win_start"], r["win_end"]): r["n"]
-        for r in spark.sql("SELECT * FROM stream_sliding").collect()
+        for r in sink.collect()
     }
     want = {
         (r["win_start"], r["win_end"]): r["n"]
@@ -220,10 +220,10 @@ def test_stream_sliding_and_session_parity(spark, sf_dir):
         "ts", "5 minutes", ["user_id"],
         F.count(F.lit(1)).alias("n"),
     )
-    run_stream_to_memory(sess, "stream_session", "append")
+    sink = run_stream_to_memory(sess, "append")
     got_s = {
         (r["user_id"], r["win_start"]): (r["win_end"], r["n"])
-        for r in spark.sql("SELECT * FROM stream_session").collect()
+        for r in sink.collect()
     }
     want_s = {
         (r["user_id"], r["win_start"]): (r["win_end"], r["n"])
@@ -253,10 +253,10 @@ def test_streaming_curation_pipeline_parity(spark, sf_dir):
     stream_q = chunk_documents(quality_score(docs_stream).filter("keep").join(
         docs_stream.select("doc_id", "text"), on="doc_id"
     ))
-    run_stream_to_memory(stream_q, "curation_stream", "append")
+    sink = run_stream_to_memory(stream_q, "append")
     got = {
         (r["doc_id"], r["chunk_idx"], r["chunk_text"])
-        for r in spark.table("curation_stream").collect()
+        for r in sink.collect()
     }
 
     docs = load_table(spark, sf_dir, "documents")
@@ -293,10 +293,10 @@ def test_interval_join_helper_stream_batch_parity(spark, sf_dir):
     stream_j = interval_join(sv, sc, "user_id", upper="10 minutes").select(
         sv["user_id"], "view_id", "click_id"
     )
-    run_stream_to_memory(stream_j, "ivj_stream", "append")
+    sink = run_stream_to_memory(stream_j, "append")
     got = {
         (r["user_id"], r["view_id"], r["click_id"])
-        for r in spark.table("ivj_stream").collect()
+        for r in sink.collect()
     }
 
     bv, bc = sides(load_table(spark, sf_dir, "events"), wm=False)
@@ -331,8 +331,8 @@ def test_stream_template_dedup_parity(spark, sf_dir, events_stream):
         "ts",
         "10 minutes",
     )
-    run_stream_to_memory(deduped, "stream_tpl_dedup", "append")
-    n_stream = spark.sql("SELECT count(*) AS n FROM stream_tpl_dedup").first()["n"]
+    sink = run_stream_to_memory(deduped, "append")
+    n_stream = sink.count()
     n_batch = (
         load_table(spark, sf_dir, "events")
         .select(fp.alias("tpl_fp"))

@@ -58,11 +58,10 @@ def test_rocksdb_state_store_matches_default_provider(spark):
             spark.conf.set(key, provider)
         try:
             agg = _windowed_agg(read_events_stream(spark, SF))
-            name = f"w30_{tag}"
-            run_stream_to_memory(agg, name, "complete", state_partitions=4)
+            sink = run_stream_to_memory(agg, "complete", state_partitions=4)
             results[tag] = {
                 (r.ws, r.event_type, r.n, round(r.tv, 6))
-                for r in spark.table(name).collect()
+                for r in sink.collect()
             }
         finally:
             if provider:

@@ -143,8 +143,7 @@ def test_ddw_state_actually_evicts(spark):
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
         )
-        run_stream_to_memory(dedup, "ddw_evict_probe", "append")
-        got = spark.table("ddw_evict_probe").count()
+        got = run_stream_to_memory(dedup, "append").count()
         assert got == expected
     finally:
         shutil.rmtree(d, ignore_errors=True)

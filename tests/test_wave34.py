@@ -55,6 +55,7 @@ def test_restart_does_not_reprocess_first_half(spark):
     import time
 
     from incubator_flink_old_spark.sources import load_table
+    from incubator_flink_old_spark.streaming import run_stream_to_memory
 
     ev = load_table(spark, SF, "events")
     src = tempfile.mkdtemp(prefix="restart_probe_src_")
@@ -79,37 +80,19 @@ def test_restart_does_not_reprocess_first_half(spark):
                 .agg(F.count(F.lit(1)).alias("n_events"))
             )
 
-        q1 = (
-            agg_stream()
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("restart_probe_1")
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        q1.processAllAvailable()
+        q1 = run_stream_to_memory(
+            agg_stream(), "complete", state_partitions=None, checkpoint=ck
+        ).stream_query
         rows1 = sum(p["numInputRows"] for p in q1.recentProgress)
-        q1.stop()
         assert rows1 == n0
 
         h1.coalesce(1).write.parquet(os.path.join(src, "half1"))
-        q2 = (
-            agg_stream()
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("restart_probe_2")
-            .option("checkpointLocation", ck)
-            .start()
+        sink2 = run_stream_to_memory(
+            agg_stream(), "complete", state_partitions=None, checkpoint=ck
         )
-        q2.processAllAvailable()
+        q2 = sink2.stream_query
         rows2 = sum(p["numInputRows"] for p in q2.recentProgress)
-        total = (
-            spark.table("restart_probe_2")
-            .agg(F.sum("n_events").alias("s"))
-            .collect()[0]
-            .s
-        )
-        q2.stop()
+        total = sink2.agg(F.sum("n_events").alias("s")).collect()[0].s
         assert rows2 == n1  # offsets recovered: half 0 never re-read
         assert total == n0 + n1  # state recovered: totals cover both
     finally:

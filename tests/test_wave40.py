@@ -160,11 +160,10 @@ def _asof_replay(spark, tmp_path, batches):
         .parquet(src)
     )
     out = stateful_asof_enrich(stream)
-    name = f"asof_law_{abs(hash(str(tmp_path))) % 10**8}"
-    run_stream_to_memory(out, name, "append", state_partitions=2)
+    sink = run_stream_to_memory(out, "append", state_partitions=2)
     return sorted(
         (r.user_id, r.event_id, r.asof_seq, r.asof_ts)
-        for r in spark.table(name).collect()
+        for r in sink.collect()
     )
 
 
@@ -306,11 +305,10 @@ def test_asof_ttl_expires_idle_keys(spark, tmp_path):
         .parquet(src)
     )
     out = stateful_asof_enrich(stream, ttl_seconds=600)
-    name = "asof_ttl_law"
-    run_stream_to_memory(out, name, "append", state_partitions=2)
+    sink = run_stream_to_memory(out, "append", state_partitions=2)
     rows = {
         r.event_id: (r.asof_seq, r.asof_ts)
-        for r in spark.table(name).collect()
+        for r in sink.collect()
     }
     # user 1's click (ts=100) expired before its lookup (watermark
     # passed 100+600 at the batch-2 boundary) → NULLs (timeout arm).

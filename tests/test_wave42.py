@@ -46,11 +46,9 @@ def _final_topk(spark, src_rows, n_files: int, order_col):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        name = f"topk_law_{n_files}_{order_col}"
-        run_stream_to_memory(
-            stateful_topk(stream, k=K), name, "update", state_partitions=2
+        tbl = run_stream_to_memory(
+            stateful_topk(stream, k=K), "update", state_partitions=2
         )
-        tbl = spark.table(name).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("event_type")
@@ -110,13 +108,9 @@ def test_stream_topk_state_is_k_bounded(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        run_stream_to_memory(
-            stateful_topk(stream, k=K),
-            "topk_bound",
-            "update",
-            state_partitions=2,
+        tbl = run_stream_to_memory(
+            stateful_topk(stream, k=K), "update", state_partitions=2
         )
-        tbl = spark.table("topk_bound").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
     per_emission = tbl.groupBy("event_type", "seen").count()
@@ -391,11 +385,9 @@ def _final_latest(spark, rows, n_files: int, order_col):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        name = f"cdc_law_{n_files}_{order_col}"
-        run_stream_to_memory(
-            stateful_latest(stream), name, "update", state_partitions=2
+        tbl = run_stream_to_memory(
+            stateful_latest(stream), "update", state_partitions=2
         )
-        tbl = spark.table(name).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("user_id")

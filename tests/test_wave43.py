@@ -121,11 +121,10 @@ def test_stateful_latest_derives_payload_types_from_schema(spark):
         out = stateful_latest(stream, payload_cols=("tag", "cnt"))
         assert dict(out.dtypes)["tag"] == "string"
         assert dict(out.dtypes)["cnt"] == "bigint"
-        run_stream_to_memory(out, "latest_schema_law", "update",
-                             state_partitions=2)
+        sink = run_stream_to_memory(out, "update", state_partitions=2)
         rows = {
             r.user_id: (r.ts_us, r.event_id, r.tag, r.cnt)
-            for r in spark.table("latest_schema_law")
+            for r in sink
             .withColumn(
                 "mx", F.max("seen").over(Window.partitionBy("user_id"))
             )
@@ -392,14 +391,11 @@ def test_streaming_bm25_stats_equals_batch(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src)
             )
-            name = f"bm25_law_{n_files}"
-            run_stream_to_memory(
+            got = run_stream_to_memory(
                 streaming_bm25_stats(stream, _TS_TERMS),
-                name,
                 "complete",
                 state_partitions=2,
-            )
-            got = spark.table(name).first()
+            ).first()
         finally:
             shutil.rmtree(src, ignore_errors=True)
         assert got.n == want.n and got.toks == want.toks, n_files
@@ -421,24 +417,18 @@ def test_streaming_bm25_stats_rejects_empty_terms(spark):
         streaming_bm25_stats(t(spark, SF, "documents"), ())
 
 
-def _replay_stream(spark, df, n_files, schema, build, name):
+def _replay_stream(spark, df, n_files, schema, build):
     """Write df as n_files parquet files, replay 1 file/microbatch
-    through build(stream), land in memory table `name`, return it."""
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    through build(stream), return the memory sink's rows."""
+    from incubator_flink_old_spark.streaming import (
+        replay_run,
+        run_stream_to_memory,
+    )
 
-    src = tempfile.mkdtemp(prefix="t2_replay_")
-    try:
-        df.repartition(n_files).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out, mode = build(stream)
-        run_stream_to_memory(out, name, mode, state_partitions=2)
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    with replay_run(spark, schema) as run:
+        run.write(df.repartition(n_files))
+        out, mode = build(run.stream())
+        return run_stream_to_memory(out, mode, state_partitions=2)
 
 
 def test_stream_neardup_screen_equals_batch(spark):
@@ -470,7 +460,6 @@ def test_stream_neardup_screen_equals_batch(spark):
                 streaming_neardup_screen(s, corpus, band_size=4),
                 "append",
             ),
-            f"nds_law_{n_files}",
         )
         got = {(r.doc_a, r.doc_b): r.jaccard for r in tbl.collect()}
         assert got == batch, n_files
@@ -521,7 +510,6 @@ def test_stream_drift_audit_equals_batch(spark):
             ),
             "complete",
         ),
-        "drift_audit_law",
     )
     got = {(r.j, r.code): (r.n_delta, r.qerr) for r in tbl.collect()}
     assert got == batch

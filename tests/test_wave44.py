@@ -6,7 +6,6 @@ batch oracle; fail-loudly on a missing event-time column)."""
 
 from __future__ import annotations
 
-import itertools
 import os
 
 import pytest
@@ -16,9 +15,6 @@ from pyspark.sql import functions as F
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 pytestmark = pytest.mark.skipif(not os.path.isdir(SF), reason="no testdata")
-
-_W44_SEQ = itertools.count()
-
 
 def test_dense_mrr_all_cells_equals_brute(spark):
     """n_probe = n_cells removes probe pruning, the serve's only
@@ -123,10 +119,8 @@ def _neardup_stream_run(spark, tmpdir, event_time, in_order=True):
         event_time=event_time,
         watermark_delay="30 seconds",
     )
-    name = f"w44_ndw_{next(_W44_SEQ)}"
-    q = run_stream_to_memory(out, name, "append", state_partitions=4)
-    rows = spark.table(name).collect()
-    return rows, q
+    sink = run_stream_to_memory(out, "append", state_partitions=4)
+    return sink.collect(), sink.stream_query
 
 
 def test_neardup_watermark_parity_and_eviction(spark, tmp_path):
@@ -456,10 +450,10 @@ def test_streaming_winnow_watermark_parity(spark, tmp_path):
         )
         if et is None:
             out = out.drop("ts")
-        name = f"w44_winwm_{next(_W44_SEQ)}"
-        q = run_stream_to_memory(out, name, "append", state_partitions=4)
+        sink = run_stream_to_memory(out, "append", state_partitions=4)
+        q = sink.stream_query
         results[label] = (
-            {(r.doc_a, r.doc_b, r.fp) for r in spark.table(name).collect()},
+            {(r.doc_a, r.doc_b, r.fp) for r in sink.collect()},
             q.lastProgress["stateOperators"][0]["numRowsTotal"],
         )
     assert results["wm"][0] == results["plain"][0] and results["wm"][0]
@@ -533,10 +527,9 @@ def test_streaming_winnow_screen_batch_parity(spark, tmp_path):
     out = streaming_winnow_screen(
         stream, docs.filter(~is_new), k=3, w=4, max_df=100
     )
-    name = f"w44_win_{next(_W44_SEQ)}"
-    run_stream_to_memory(out, name, "append", state_partitions=4)
+    sink = run_stream_to_memory(out, "append", state_partitions=4)
     got = {
-        (r.doc_a, r.doc_b, r.fp) for r in spark.table(name).collect()
+        (r.doc_a, r.doc_b, r.fp) for r in sink.collect()
     }
     fps = winnow_fingerprints(docs, k=3, w=4).select("doc_id", "fp").distinct()
     nfp = fps.filter(is_new)
@@ -643,12 +636,11 @@ def test_streaming_winnow_stats_boundary_invariance(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    name = f"t_winstats_{next(_W44_SEQ)}"
-    run_stream_to_memory(
-        streaming_winnow_stats(stream, k=3, w=4), name, "complete",
+    sink = run_stream_to_memory(
+        streaming_winnow_stats(stream, k=3, w=4), "complete",
         state_partitions=4,
     )
-    streamed = sorted(map(tuple, spark.table(name).collect()))
+    streamed = sorted(map(tuple, sink.collect()))
     batch = winnow_index_stats(
         winnow_fingerprints(docs, k=3, w=4, hashes_only=True)
     )

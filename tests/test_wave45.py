@@ -11,7 +11,6 @@ production row, mean_recall = hits/(n_queries·k))."""
 
 from __future__ import annotations
 
-import itertools
 import os
 
 import pytest
@@ -20,8 +19,6 @@ from pyspark.sql import functions as F
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 pytestmark = pytest.mark.skipif(not os.path.isdir(SF), reason="no testdata")
-
-_W45_SEQ = itertools.count()
 
 
 def test_winnow_from_index_stats_requires_cap(spark):
@@ -119,14 +116,12 @@ def test_streaming_winnow_stats_dedup_guard(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        name = f"t_windup_{next(_W45_SEQ)}"
-        run_stream_to_memory(
+        sink = run_stream_to_memory(
             streaming_winnow_stats(stream, k=3, w=4, dedup_guard=guard),
-            name,
             "complete",
             state_partitions=4,
         )
-        return sorted(map(tuple, spark.table(name).collect()))
+        return sorted(map(tuple, sink.collect()))
 
     batch = sorted(
         map(

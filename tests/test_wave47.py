@@ -161,7 +161,10 @@ def test_stream_semantic_gate_no_window_one_state(spark, tmp_path):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.queries._util import t
-    from incubator_flink_old_spark.streaming import append_literal_rows
+    from incubator_flink_old_spark.streaming import (
+        append_literal_rows,
+        run_stream_to_memory,
+    )
 
     docs = t(spark, SF, "documents")
     emb = t(spark, SF, "embeddings")
@@ -248,21 +251,14 @@ def test_stream_semantic_gate_no_window_one_state(spark, tmp_path):
     # materialized artifact, so even batch-side train windows are out.
     assert not windows, [str(n) for n in windows]
 
-    name = "t47_semgate"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    sink = run_stream_to_memory(out, "append", state_partitions=None)
+    q = sink.stream_query
     # Plan pin 2: exactly ONE stateful operator executed.
     assert len(q.lastProgress["stateOperators"]) == 1
 
     got = {
         r["doc_id"]: tuple(r)[1:]
-        for r in spark.table(name).filter(F.col("doc_id") >= 0).collect()
+        for r in sink.filter(F.col("doc_id") >= 0).collect()
     }
     from incubator_flink_old_spark.operators.similarity import (
         semantic_screen_events,
@@ -652,7 +648,10 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
     from incubator_flink_old_spark.operators.text import (
         streaming_ingest_gate,
     )
-    from incubator_flink_old_spark.streaming import append_literal_rows
+    from incubator_flink_old_spark.streaming import (
+        append_literal_rows,
+        run_stream_to_memory,
+    )
 
     schema_e = "vec_id long, embedding array<float>"
     corpus0 = spark.createDataFrame(
@@ -678,7 +677,7 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
         "doc_id long, text string, lang string, ts timestamp",
     )
 
-    def run(cells, emb, name):
+    def run(cells, emb):
         stream = (
             spark.readStream.schema(
                 "doc_id long, text string, lang string, ts timestamp"
@@ -706,24 +705,16 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
             event_time="ts",
             watermark_delay="30 seconds",
         )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        sink = run_stream_to_memory(out, "append", state_partitions=None)
         return {
             r["doc_id"]: r.asDict()
-            for r in spark.table(name).filter(F.col("doc_id") >= 0).collect()
+            for r in sink.filter(F.col("doc_id") >= 0).collect()
         }
 
-    frozen = run(cells0, corpus0, "t47_sa_frozen")
+    frozen = run(cells0, corpus0)
     merged = run(
         cells0.unionByName(grid_assign(w1, centers)),
         corpus0.unionByName(w1),
-        "t47_sa_merged",
     )
     assert frozen[20]["has_semdup"] is False
     assert merged[20]["has_semdup"] is True

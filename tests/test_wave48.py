@@ -54,11 +54,17 @@ def test_grid_assign_map_broadcast_arm_equals_literal(spark, monkeypatch):
     _, centers = _trained(spark)
     rows = centers.collect()
     emb = _emb(spark)
+    # A caller column named like the broadcast arm's helper column must
+    # not clash with it: both arms accept the same inputs.
+    clash = emb.withColumn("__centers", F.lit(7))
     lit_arm = {(r.vec_id, r.cell) for r in grid_assign_map(emb, rows).collect()}
     joined = {(r.vec_id, r.cell) for r in grid_assign(emb, centers).collect()}
     monkeypatch.setattr(similarity, "_FOLD_LITERAL_MAX_ELEMS", 0)
     bc_arm = {(r.vec_id, r.cell) for r in grid_assign_map(emb, rows).collect()}
-    assert bc_arm == lit_arm == joined
+    bc_clash = {
+        (r.vec_id, r.cell) for r in grid_assign_map(clash, rows).collect()
+    }
+    assert bc_arm == bc_clash == lit_arm == joined
 
 
 def test_grid_assign_map_plan_arms(spark, monkeypatch):
@@ -96,7 +102,13 @@ def test_grid_pq_encode_map_broadcast_arm_equals_literal(spark, monkeypatch):
         (r.vec_id, r.j, r.code, r.qerr)
         for r in grid_pq_encode_map(emb, rows, m=4).collect()
     }
-    assert bc_arm == lit_arm
+    bc_clash = {
+        (r.vec_id, r.j, r.code, r.qerr)
+        for r in grid_pq_encode_map(
+            emb.withColumn("__books", F.lit(7)), rows, m=4
+        ).collect()
+    }
+    assert bc_arm == bc_clash == lit_arm
 
 
 def test_sq8_encode_map_broadcast_arm_equals_literal(spark, monkeypatch):
@@ -123,7 +135,11 @@ def test_sq8_encode_map_broadcast_arm_equals_literal(spark, monkeypatch):
     bc_arm = {
         (r.vec_id, r.p, r.c) for r in sq8_encode_map(emb, bounds).collect()
     }
-    assert bc_arm == lit_arm
+    clash = emb.withColumn("__lo", F.lit(7)).withColumn("__HI", F.lit(7))
+    bc_clash = {
+        (r.vec_id, r.p, r.c) for r in sq8_encode_map(clash, bounds).collect()
+    }
+    assert bc_arm == bc_clash == lit_arm
 
 
 def test_grid_trainers_broadcast_arm_equals_literal(spark, monkeypatch):
